@@ -210,3 +210,49 @@ def test_ivf_auto_centroids_end_to_end(spark, embeddings):
         ).collect()
     }
     assert ivf == bf
+
+
+def test_ivf_probed_matches_numpy_reference(spark):
+    """Probed mode (n_probe < n_centroids) pinned per (query, rank) —
+    neighbor and cosine — against a numpy reference that rebuilds the
+    same centroids (the first n_centroids vectors in xxhash64(vec_id)
+    order), the same cell assignment and the same ranking rule."""
+    from face_duplicate_detection_spark.operators.similarity import (
+        cosine_topk_ivf,
+    )
+
+    rng = np.random.default_rng(5)
+    centers = rng.standard_normal((10, 12)) * 3
+    V = np.array([centers[i % 10] + rng.standard_normal(12) for i in range(300)])
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(V)], ["vec_id", "embedding"]
+    )
+    n_centroids, n_probe, k, n_queries = 12, 3, 4, 60
+    got = {
+        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
+        for r in cosine_topk_ivf(
+            emb, emb.filter(F.col("vec_id") < n_queries), k=k,
+            n_centroids=n_centroids, n_probe=n_probe,
+        ).collect()
+    }
+
+    cent = [
+        r["vec_id"]
+        for r in emb.orderBy(F.xxhash64("vec_id")).limit(n_centroids).collect()
+    ]
+    norms = np.linalg.norm(V, axis=1)
+    Vn = V / norms[:, None]
+    probes = np.argsort(-(Vn @ Vn[cent].T), axis=1, kind="stable")[:, :n_probe]
+    cell = probes[:, 0]
+    want = {}
+    for q in range(n_queries):
+        members = [j for j in range(len(V)) if j != q and cell[j] in probes[q]]
+        cos = {j: round(float(V[q] @ V[j] / (norms[q] * norms[j])), 6) for j in members}
+        ranked = sorted(members, key=lambda j: (-cos[j], j))[:k]
+        for rank, j in enumerate(ranked, 1):
+            want[(q, rank)] = (j, cos[j])
+
+    assert got.keys() == want.keys()
+    for key, (nb, cos) in want.items():
+        assert got[key][0] == nb, key
+        assert abs(got[key][1] - cos) <= 1e-6, key

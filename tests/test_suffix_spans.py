@@ -214,3 +214,47 @@ def test_non_ascii_span_len_in_chars(spark, cfg):
     oracle = _lcs_len(na, nb)
     assert got == oracle
     assert abs(got - 300) <= 2
+
+
+def test_span_kernel_equals_automaton_lcs_random():
+    """The numpy diagonal-run kernel equals the automaton LCS on seeded
+    random pairs: small alphabets with planted shared spans, non-ASCII
+    text, and periodic blocks long enough that the multiplicity cap
+    binds in both docs while the LCS is a non-periodic span.  Where the
+    LCS itself lies in a capped periodic block the kernel reports the
+    documented lower bound, at least cap + w − 1."""
+    import numpy as np
+
+    from face_duplicate_detection_spark.operators.suffix_spans import (
+        _anchor_index,
+        _diagonal_span,
+    )
+
+    w, cap = 16, 8
+    rng = np.random.default_rng(7)
+
+    def rand(alphabet, n):
+        return "".join(rng.choice(list(alphabet), int(n)))
+
+    def kernel(a, b):
+        return _diagonal_span(_anchor_index(a, w, cap), _anchor_index(b, w, cap), w)
+
+    alphabets = ["ab c", "abcdefghij klmnop", "ünïcödé ☃ àç"]
+    for i in range(60):
+        alpha = alphabets[i % 3]
+        shared = rand(alpha, rng.integers(0, 90))
+        a = rand(alpha, rng.integers(0, 60)) + shared + rand(alpha, rng.integers(0, 60))
+        b = rand(alpha, rng.integers(0, 60)) + shared + rand(alpha, rng.integers(0, 60))
+        lcs = _lcs_len(a, b)
+        assert kernel(a, b) == (lcs if lcs >= w else 0), (a, b)
+
+    for _ in range(10):
+        shared = rand("abcdefgh", rng.integers(60, 120))
+        a = "xy" * int(rng.integers(40, 80)) + "|" + shared + "#" + rand("ab", 30)
+        b = rand("ab", 30) + "%" + shared + "&" + "xy" * 20
+        for t in (a, b):
+            assert _anchor_index(t, w, cap)[0].size < len(t) - w + 1
+        assert kernel(a, b) == _lcs_len(a, b) >= len(shared)
+
+    a, b = "xy" * 200, "q" + "xy" * 150
+    assert cap + w - 1 <= kernel(a, b) <= _lcs_len(a, b) == 300

@@ -8,9 +8,11 @@ Usage: python tools/check_oracles.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 
@@ -44,7 +46,8 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = get_spark(app_name="oracle-check", master="local[16]")
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    spark = get_spark(app_name="oracle-check", master=f"local[{cores}]")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

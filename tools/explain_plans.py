@@ -10,9 +10,10 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -113,9 +114,9 @@ def main():
     sections.append(
         (
             "ANN brute-force top-k",
-            "expect: BroadcastNestedLoopJoin with the *query* side "
-            "broadcast; dot products via higher-order aggregate in "
-            "codegen; window top-k after.",
+            "expect: ONE MapInPandas BLAS scoring pass over the queries "
+            "(corpus broadcast, within ANN_BRUTE_MAX) — no join, no "
+            "higher-order-function cosine; window top-k after.",
             fmt(topk),
         )
     )
@@ -130,8 +131,9 @@ def main():
         (
             "ANN IVF top-k (large query set)",
             "expect: two ArrowEvalPython cell-assignment passes (corpus "
-            "once, queries once), a shuffle equi-join on `cell` — NOT a "
-            "broadcast cross join — then window top-k per query.",
+            "once, queries once), a FlatMapCoGroupsInPandas on `cell` "
+            "(per-cell BLAS scoring) — NOT a broadcast cross join — then "
+            "window top-k per query.",
             fmt(ivf),
         )
     )
@@ -149,22 +151,17 @@ def main():
     )
 
     from face_duplicate_detection_spark.operators.suffix_spans import (
-        anchor_candidate_pairs,
-        emit_anchors,
-        verify_spans,
+        long_span_pairs,
     )
 
-    anchors = emit_anchors(m, cfg, winnow=False)
-    spans = verify_spans(anchor_candidate_pairs(anchors, cfg), m, cfg)
+    spans = long_span_pairs(m, cfg, winnow=False)
     sections.append(
         (
-            "long-span verification (native diagonal runs)",
-            "expect: NO applyInPandas / per-pair Python — positioned "
-            "anchors (MapInPandas ×1 over candidate docs), two equi-"
-            "joins, row_number window on (a,b,diag), two HashAggregates. "
-            "(The LogicalRDDs are the materialized candidate set and "
-            "positioned anchors — LSH-bounded, checkpointed to avoid "
-            "re-running candidate generation 3× inside one query.)",
+            "long-span verification (numpy diagonal runs)",
+            "expect: ONE MapInPandas over pairs ⋈ texts(a) ⋈ texts(b) — "
+            "no positioned-anchor rows, no Window.  (The ExistingRDD "
+            "scans read the checkpointed anchor stream that candidate "
+            "generation scans three times.)",
             fmt(spans),
         )
     )
