@@ -717,9 +717,10 @@ def q_lineage_stats(spark, sf_dir):
 def q_incremental_batch_ledger(spark, sf_dir):
     """B3 resume surface: three keyed batches + a replay of an
     already-applied key.  Returns per-batch (batch_seq, n_new_sigs)
-    from the committed inc_metrics state — exactly three rows iff the
-    replay was a no-op and each batch was applied exactly once.
-    Session-lifetime scratch catalog keeps the result lazy."""
+    read from the catalog's batch ledger, whose entries carry the
+    counts each batch observed while it ran — exactly three rows with
+    seqs 1-3 iff the replay was a no-op and each batch was applied
+    exactly once."""
     from face_duplicate_detection_spark.catalog import (
         StageCatalog,
         session_scratch,
@@ -738,7 +739,6 @@ def q_incremental_batch_ledger(spark, sf_dir):
             CFG,
             cat,
             spark,
-            with_metrics=True,
             batch_key=f"b{k}",
         )
     # at-least-once delivery: replay of an applied key is a no-op
@@ -747,14 +747,12 @@ def q_incremental_batch_ledger(spark, sf_dir):
         CFG,
         cat,
         spark,
-        with_metrics=True,
         batch_key="b0",
     )
-    return (
-        cat.read(spark, "inc_metrics")
-        .select("batch_seq", "n_new_sigs")
-        .orderBy("batch_seq")
-    )
+    return spark.createDataFrame(
+        [(e["seq"], e["counts"]["n_new_sigs"]) for e in cat.applied_batches().values()],
+        "batch_seq long, n_new_sigs long",
+    ).orderBy("batch_seq")
 
 
 def q_incremental_dedup(spark, sf_dir):

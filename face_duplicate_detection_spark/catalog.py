@@ -158,6 +158,19 @@ class StageCatalog:
         with open(self._manifest(name)) as f:
             return json.load(f)
 
+    def partition_rows(self, name: str, column: str, values: list[int]) -> int:
+        """Rows in the ``column ∈ values`` partitions of a
+        ``partition_by`` table — what a pruned read of it scans —
+        summed from the parquet footers, without a Spark job."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        part = ds.partitioning(pa.schema([(column, pa.int32())]), flavor="hive")
+        table = ds.dataset(
+            self.read_manifest(name)["path"], format="parquet", partitioning=part
+        )
+        return table.count_rows(filter=ds.field(column).isin(values))
+
     def invalidate(self, name: str) -> None:
         if self.is_committed(name):
             os.remove(self._manifest(name))
@@ -178,11 +191,17 @@ class StageCatalog:
         with open(self._ledger_path()) as f:
             return json.load(f)
 
+    def applied_batches(self) -> dict[str, dict]:
+        """The ledger entries, batch key → {seq, applied_at_unix,
+        counts}: ``counts`` are the row counts the batch observed on
+        its own checkpoint jobs (streaming/incremental.py)."""
+        return self._read_ledger()["applied"]
+
     def batch_applied(self, key: str) -> bool:
-        return str(key) in self._read_ledger()["applied"]
+        return str(key) in self.applied_batches()
 
     def applied_count(self) -> int:
-        return len(self._read_ledger()["applied"])
+        return len(self.applied_batches())
 
     def max_applied_seq(self) -> int:
         """Highest batch_seq ever recorded in the ledger (0 if none).
@@ -191,14 +210,16 @@ class StageCatalog:
         keeps sequence numbers collision-free even if the ledger and
         the delta log ever disagree (ADVICE r3: a delta log written
         before the ledger existed must not be re-numbered from 1)."""
-        applied = self._read_ledger()["applied"]
+        applied = self.applied_batches()
         return max((int(v.get("seq", 0)) for v in applied.values()), default=0)
 
-    def mark_batch_applied(self, key: str, seq: int) -> None:
+    def mark_batch_applied(self, key: str, seq: int, counts: dict) -> None:
+        """Commit the batch: one atomic JSON write of its entry."""
         ledger = self._read_ledger()
         ledger["applied"][str(key)] = {
             "seq": seq,
             "applied_at_unix": time.time(),
+            "counts": counts,
         }
         tmp = self._ledger_path() + ".tmp"
         with open(tmp, "w") as f:

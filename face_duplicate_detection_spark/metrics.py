@@ -1,14 +1,17 @@
-"""Per-stage metrics and per-partition lineage.
+"""Per-partition lineage.
 
 The reference samples CPU/RAM/GPU per item and keeps scalar counters
 (``/root/reference/duplicate_face.py:17-25,29-32,153-155,191-193``).
 The Spark re-expression (SURVEY.md §2.10 B4):
 
-- ``df.observe`` named accumulators per stage — row counts and
-  conditional sums computed inside the existing job, zero extra scans;
-- a ``lineage`` table with one row per (stage, partition): rows seen
-  and wall time, produced by a pass-through ``mapInPandas`` wrapper —
-  the north_rule's "per-partition lineage and metrics" requirement.
+- running counters are ``df.observe`` Observations on the jobs that
+  already run: ``streaming.incremental.incremental_batch`` observes
+  each batch's row counts on its checkpoint jobs and commits them with
+  the batch's ledger entry — zero extra scans;
+- :func:`lineage_rows` builds the ``lineage`` table, one row per
+  (stage, partition): rows seen and wall time, produced by a
+  pass-through ``mapInPandas`` wrapper — the north_rule's
+  "per-partition lineage and metrics" requirement.
 """
 
 from __future__ import annotations
@@ -17,8 +20,7 @@ import time
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 LINEAGE_SCHEMA = T.StructType(
@@ -29,20 +31,6 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("wall_ms", T.LongType(), False),
     ]
 )
-
-
-def observe_stage(df: DataFrame, stage: str) -> tuple[DataFrame, Observation]:
-    """Attach an Observation counting rows (+ status mix when present).
-
-    Read ``obs.get`` after the next action on the returned frame.
-    """
-    obs = Observation(stage)
-    metrics = [F.count(F.lit(1)).alias("rows")]
-    if "status" in df.columns:
-        metrics.append(
-            F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("rows_ok")
-        )
-    return df.observe(obs, *metrics), obs
 
 
 def lineage_rows(df: DataFrame, stage: str) -> DataFrame:

@@ -129,7 +129,6 @@ def _star_round(e: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
-    eager: bool = True,
     driver_cap: int | None = None,
 ) -> DataFrame:
     """edges(a, b) → labels(doc_id, cluster_id = min doc_id in component).
@@ -164,68 +163,58 @@ def connected_components(
     # already partitioned by (hi, lo), and the star rounds re-shuffle
     # by a different key anyway — the former repartition("hi") was one
     # extra full exchange per CC invocation for nothing (round 6)
-    e = local_ckpt(e, eager=eager)
+    e = local_ckpt(e)
     spark = e.sparkSession
-    parts = None
-    if eager:
-        n_edges = e.count()
-        cap = CC_DRIVER_CAP if driver_cap is None else driver_cap
-        if n_edges <= cap:
-            # bounded driver fast path (see CC_DRIVER_CAP): one
-            # collect of ≤ cap (hi, lo) longs, exact union-find, and
-            # the star table goes back as a broadcast left join — the
-            # same final join shape as the distributed loop, so
-            # self-loop-only nodes (present in `nodes`, absent from
-            # `e`) still label themselves identically.
-            import pandas as pd
+    n_edges = e.count()
+    cap = CC_DRIVER_CAP if driver_cap is None else driver_cap
+    if n_edges <= cap:
+        # bounded driver fast path (see CC_DRIVER_CAP): one collect of
+        # ≤ cap (hi, lo) longs, exact union-find, and the star table
+        # goes back as a broadcast left join — the same final join
+        # shape as the distributed loop, so self-loop-only nodes
+        # (present in `nodes`, absent from `e`) still label themselves
+        # identically.
+        import pandas as pd
 
-            lab = _union_find_labels(
-                (r["hi"], r["lo"]) for r in e.collect()
-            )
-            star = [(n, r) for n, r in lab.items() if n != r]
-            star_df = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "node": pd.array([n for n, _ in star], dtype="int64"),
-                        "root": pd.array([r for _, r in star], dtype="int64"),
-                    }
-                ),
-                schema="node long, root long",
-            )
-            return nodes.join(F.broadcast(star_df), "node", "left").select(
-                F.col("node").alias("doc_id"),
-                F.coalesce("root", "node").alias("cluster_id"),
-            )
-        # size the per-round edge set to the actual edge count — dup
-        # graphs are usually tiny relative to the corpus, and 32-task
-        # jobs over a few thousand edges are pure scheduler overhead.
-        # The sizing is expressed as an explicit repartition(parts, hi)
-        # on each round's OUTPUT (plus AQE coalescing the intra-round
-        # groupBy/join shuffles) — NOT by mutating the session-global
-        # spark.sql.shuffle.partitions, which would silently resize any
-        # concurrent query on a shared session for the duration of the
-        # loop (ADVICE r3 / VERDICT r3 "what's wrong" #2; the A/B in
-        # tools/cc_conf_experiment.py measured the explicit form faster
-        # on small graphs — the common case — and within 8% on a
-        # pathological 200k-edge chain).  Round inputs are narrowed
-        # with coalesce (no shuffle, no second checkpoint job — round
-        # 6; the rounds repartition their OUTPUTS to `parts` anyway).
-        parts = max(1, min(
-            spark.sparkContext.defaultParallelism,
-            n_edges // 50_000 + 1,
-        ))
-        if parts < e.rdd.getNumPartitions():
-            e = e.coalesce(parts)
+        lab = _union_find_labels((r["hi"], r["lo"]) for r in e.collect())
+        star = [(n, r) for n, r in lab.items() if n != r]
+        star_df = spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "node": pd.array([n for n, _ in star], dtype="int64"),
+                    "root": pd.array([r for _, r in star], dtype="int64"),
+                }
+            ),
+            schema="node long, root long",
+        )
+        return nodes.join(F.broadcast(star_df), "node", "left").select(
+            F.col("node").alias("doc_id"),
+            F.coalesce("root", "node").alias("cluster_id"),
+        )
+    # size the per-round edge set to the actual edge count — dup graphs
+    # are usually tiny relative to the corpus, and 32-task jobs over a
+    # few thousand edges are pure scheduler overhead.  The sizing is an
+    # explicit repartition(parts, hi) on each round's OUTPUT (plus AQE
+    # coalescing the intra-round groupBy/join shuffles) — NOT a change
+    # of the session-global spark.sql.shuffle.partitions, which would
+    # silently resize any concurrent query on a shared session for the
+    # duration of the loop (ADVICE r3 / VERDICT r3 "what's wrong" #2).
+    # Measured against that session-conf form: the explicit repartition
+    # was faster on small graphs (the common case) and within 8% on a
+    # pathological 200k-edge chain.  Round inputs are narrowed with
+    # coalesce (no shuffle, no second checkpoint job — round 6; the
+    # rounds repartition their OUTPUTS to `parts` anyway).
+    parts = max(1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1))
+    if parts < e.rdd.getNumPartitions():
+        e = e.coalesce(parts)
 
     prev_sig: tuple | None = None
     converged = False
     for _ in range(max_iterations):
         obs = Observation()
-        rnd = _star_round(e)
-        if parts is not None:
-            rnd = rnd.repartition(parts, "hi")
-        new_e = (
-            rnd
+        e = local_ckpt(
+            _star_round(e)
+            .repartition(parts, "hi")
             .observe(
                 obs,
                 F.count(F.lit(1)).alias("n"),
@@ -233,29 +222,22 @@ def connected_components(
                 # fingerprint (edges are distinct), no ANSI overflow
                 F.bit_xor(F.xxhash64("hi", "lo")).alias("hsum"),
             )
-            
         )
-        new_e = local_ckpt(new_e, eager=eager)
-        if not eager:
-            new_e.count()  # lazy mode: force the job so obs resolves
-        e = new_e
         got = obs.get
         sig = (got["n"], got["hsum"])
         if sig == prev_sig:
             converged = True
             break
         prev_sig = sig
-        if parts is not None:
-            # resize the NEXT round to the observed edge count: star
-            # rounds shrink the edge set geometrically, and keeping the
-            # round-1 partition count schedules ever-emptier tasks — a
-            # fixed per-round cost that made the CC stage anti-scale
-            # (9.3 s @2 cores → 12.2 s @8 on the 800k corpus before
-            # this; the observation is free, no extra job)
-            parts = max(1, min(
-                spark.sparkContext.defaultParallelism,
-                int(got["n"]) // 50_000 + 1,
-            ))
+        # resize the NEXT round to the observed edge count: star rounds
+        # shrink the edge set geometrically, and keeping the round-1
+        # partition count schedules ever-emptier tasks — a fixed
+        # per-round cost that made the CC stage anti-scale (9.3 s @2
+        # cores → 12.2 s @8 on the 800k corpus before this; the
+        # observation is free, no extra job)
+        parts = max(1, min(
+            spark.sparkContext.defaultParallelism, int(got["n"]) // 50_000 + 1
+        ))
 
     if not converged:
         raise RuntimeError(

@@ -23,16 +23,15 @@ def with_text_hash(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """64-bit shuffle-prefix hash of the text.
 
     Never used as the *semantic* grouping key on its own — callers
-    always pair it with the text column (see :func:`exact_clusters`).
+    always pair it with the text column (see :func:`exact_base`).
     """
     return docs.withColumn("text_hash", F.xxhash64(F.col(text_col)))
 
 
-def exact_clusters(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """docs(doc_id, text) → (doc_id, exact_cluster_id = min doc_id of
-    identical-text group).
+def exact_base(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """The one ``(text_hash, text)`` window every exact-dedup output is
+    a projection of: (doc_id, text, rep = min doc_id of the
+    identical-text group, _rn = rank within the group).
 
     Grouping key is ``(xxhash64(text), text)`` — NOT the hash alone: a
     64-bit hash collision would otherwise falsely merge two unrelated
@@ -42,37 +41,11 @@ def exact_clusters(
     shuffle prefix (cheap partitioning + sort key); the text column
     disambiguates, making the semantics exactly "partition by text" —
     what the oracle computes.
-    """
-    hashed = with_text_hash(docs, text_col)
-    from pyspark.sql.window import Window
 
-    w = Window.partitionBy("text_hash", text_col)
-    return hashed.select(
-        id_col, F.min(id_col).over(w).alias("exact_cluster_id")
-    )
-
-
-def exact_dup_edges(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(rep, member) edges for identical-text groups of size ≥ 2."""
-    c = exact_clusters(docs, id_col)
-    return c.filter(F.col(id_col) != F.col("exact_cluster_id")).select(
-        F.col("exact_cluster_id").alias("a"), F.col(id_col).alias("b")
-    )
-
-
-def exact_base(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """One window pass serving BOTH pipeline consumers (round 6).
-
-    The pipeline used to run two separate windows over the identical
-    ``(text_hash, text)`` key — :func:`exact_dup_edges` for the edge
-    set and :func:`exact_representatives` for the rows that proceed to
-    signatures — i.e. the full text column was shuffled twice per run.
-    This emits (doc_id, text, rep = min doc_id of the identical-text
-    group, _rn = rank within the group) from a single exchange+sort:
-    with the window ordered by doc_id ascending, the running ``min``
-    over the default frame IS the group minimum, so ``min`` and
-    ``row_number`` share one Window operator.  Edges are the
-    ``doc_id != rep`` rows; representatives are ``_rn == 1``.
+    One exchange+sort of the text column serves edges and
+    representatives alike: with the window ordered by doc_id
+    ascending, the running ``min`` over the default frame IS the group
+    minimum, so ``min`` and ``row_number`` share one Window operator.
     """
     from pyspark.sql.window import Window
 
@@ -86,18 +59,24 @@ def exact_base(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def exact_representatives(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """One row per distinct text: the min-doc_id representative.
-
-    Single window pass (one shuffle of the text column) instead of
-    groupBy + semi-join (which would shuffle the text twice).
-    """
-    from pyspark.sql.window import Window
-
-    hashed = with_text_hash(docs)
-    w = Window.partitionBy("text_hash", "text").orderBy(id_col)
-    return (
-        hashed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "text_hash")
+def exact_clusters(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """docs(doc_id, text) → (doc_id, exact_cluster_id = min doc_id of
+    identical-text group)."""
+    return exact_base(docs, id_col).select(
+        id_col, F.col("rep").alias("exact_cluster_id")
     )
+
+
+def exact_dup_edges(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(rep, member) edges for identical-text groups of size ≥ 2."""
+    return (
+        exact_base(docs, id_col)
+        .filter(F.col(id_col) != F.col("rep"))
+        .select(F.col("rep").alias("a"), F.col(id_col).alias("b"))
+    )
+
+
+def exact_representatives(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(doc_id, text): one row per distinct text, its min-doc_id
+    representative."""
+    return exact_base(docs, id_col).filter(F.col("_rn") == 1).select(id_col, "text")

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 
-def local_ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
+def local_ckpt(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint with SERIALIZED storage.
 
     ``DataFrame.localCheckpoint()`` defaults to the JVM's
@@ -31,7 +31,7 @@ def local_ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
     deserialization cost is paid only by the 2-3 consumers each hot
     stage actually has."""
     return df.localCheckpoint(
-        eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK
+        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
     )
 
 

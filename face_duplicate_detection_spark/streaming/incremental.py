@@ -45,7 +45,7 @@ O(corpus)-per-batch costs, all removed):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from face_duplicate_detection_spark.catalog import StageCatalog
@@ -156,32 +156,64 @@ def _latest_deltas(spark: SparkSession, catalog: StageCatalog) -> DataFrame | No
     )
 
 
-def resolved_clusters(spark: SparkSession, catalog: StageCatalog) -> DataFrame:
-    """Merge-on-read view of the cluster state: all seen doc_ids ⟕
-    compacted base ⟕ latest delta (delta wins), singletons implicit."""
-    ids = catalog.read(spark, "state_signatures").select("doc_id")
-    label = None
+def resolved_clusters(
+    spark: SparkSession,
+    catalog: StageCatalog,
+    ids: DataFrame | None = None,
+    cfg: DedupConfig | None = None,
+    deltas: DataFrame | None = None,
+    base_rows: list[int] | None = None,
+) -> DataFrame:
+    """Merge-on-read view of the cluster state (doc_id, cluster_id):
+    compacted base ⟕ latest delta (delta wins), singletons implicit.
+
+    Without ``ids`` every seen doc_id (``state_signatures``) is
+    resolved against the unpruned base.  With ``ids`` (and ``cfg``)
+    only those docs are, and the label state is never fully scanned
+    (VERDICT r3 "what's wrong" #1): the base is partition-pruned to
+    the ids' ``doc_bkt`` buckets (pmod with the compact-time bucket
+    count) and both sides are semi-joined to the broadcast id set.
+    ``deltas`` reuses a caller's latest-delta view.  ``base_rows``
+    gets the pruned read's row count appended, from the parquet
+    footers: an Observation inside this plan is not reliable, because
+    AQE drops the observed subtree whenever no id is in the base
+    (empty-relation propagation) and ``Observation.get`` then fails.
+    """
+    if ids is None:
+        out = catalog.read(spark, "state_signatures").select("doc_id")
+    else:
+        out = ids.select("doc_id").distinct()
+        bids = F.broadcast(out)
+
+    def lookup(table: DataFrame, alias: str) -> DataFrame:
+        if ids is not None:
+            table = table.join(bids, "doc_id", "left_semi")
+        return table.select("doc_id", F.col("cluster_id").alias(alias))
+
+    label = F.col("doc_id")
     if catalog.is_committed(BASE_TABLE):
-        base = catalog.read(spark, BASE_TABLE).select(
-            "doc_id", F.col("cluster_id").alias("_base")
-        )
-        ids = ids.join(base, "doc_id", "left")
-        label = F.col("_base")
-    deltas = _latest_deltas(spark, catalog)
+        base = catalog.read(spark, BASE_TABLE)
+        if ids is not None:
+            p = _base_partitions(catalog, BASE_TABLE, cfg)
+            buckets = [
+                r["b"]
+                for r in out.select(F.pmod("doc_id", F.lit(p)).alias("b"))
+                .distinct()
+                .collect()
+            ]
+            base = base.filter(F.col("doc_bkt").isin(buckets))  # partition pruning
+            if base_rows is not None:
+                base_rows.append(
+                    catalog.partition_rows(BASE_TABLE, "doc_bkt", buckets)
+                )
+        out = out.join(lookup(base, "_base"), "doc_id", "left")
+        label = F.coalesce("_base", label)
+    if deltas is None:
+        deltas = _latest_deltas(spark, catalog)
     if deltas is not None:
-        ids = ids.join(
-            deltas.select("doc_id", F.col("cluster_id").alias("_delta")),
-            "doc_id",
-            "left",
-        )
-        label = (
-            F.coalesce("_delta", "_base") if label is not None else F.col("_delta")
-        )
-    if label is None:
-        label = F.col("doc_id")
-    return ids.select(
-        "doc_id", F.coalesce(label, F.col("doc_id")).alias("cluster_id")
-    )
+        out = out.join(lookup(deltas, "_delta"), "doc_id", "left")
+        label = F.coalesce("_delta", label)
+    return out.select("doc_id", label.alias("cluster_id"))
 
 
 def _affected_members(
@@ -240,65 +272,6 @@ def _affected_members(
     return out.select("doc_id", "cluster_id")
 
 
-def _resolved_for(
-    spark: SparkSession,
-    catalog: StageCatalog,
-    ids: DataFrame,
-    cfg: DedupConfig,
-    counters: dict | None = None,
-    deltas: DataFrame | None = None,
-) -> DataFrame:
-    """Current labels for the GIVEN doc_ids only (doc_id, cluster_id).
-
-    Unlike :func:`resolved_clusters` this never scans the full label
-    state (VERDICT r3 "what's wrong" #1 — the last O(corpus) touch per
-    micro-batch): the compacted base is partition-pruned to the ids'
-    ``doc_bkt`` buckets (pmod with the compact-time bucket count) and
-    semi-joined to the broadcast id set before the left join; the
-    delta side is the since-compaction log, already small.
-    """
-    ids = ids.select("doc_id").distinct()
-    bids = F.broadcast(ids)
-    out = ids
-    base_label = None
-    if catalog.is_committed(BASE_TABLE):
-        p = _base_partitions(catalog, BASE_TABLE, cfg)
-        buckets = [
-            r["b"]
-            for r in ids.select(F.pmod("doc_id", F.lit(p)).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        pruned = catalog.read(spark, BASE_TABLE).filter(
-            F.col("doc_bkt").isin(buckets)          # partition pruning
-        )
-        if counters is not None:
-            counters["n_endpoint_base_rows"] = pruned.count()
-        base = pruned.join(bids, "doc_id", "left_semi").select(
-            "doc_id", F.col("cluster_id").alias("_base")
-        )
-        out = out.join(base, "doc_id", "left")
-        base_label = F.col("_base")
-    if deltas is None:
-        deltas = _latest_deltas(spark, catalog)
-    label = base_label
-    if deltas is not None:
-        delta = deltas.join(bids, "doc_id", "left_semi").select(
-            "doc_id", F.col("cluster_id").alias("_delta")
-        )
-        out = out.join(delta, "doc_id", "left")
-        label = (
-            F.coalesce("_delta", "_base")
-            if base_label is not None
-            else F.col("_delta")
-        )
-    if label is None:
-        label = F.col("doc_id")
-    return out.select(
-        "doc_id", F.coalesce(label, F.col("doc_id")).alias("cluster_id")
-    )
-
-
 def compact_state(
     spark: SparkSession, catalog: StageCatalog, cfg: DedupConfig
 ) -> None:
@@ -340,7 +313,6 @@ def incremental_batch(
     cfg: DedupConfig,
     catalog: StageCatalog,
     spark: SparkSession | None = None,
-    with_metrics: bool = False,
     batch_key: str | None = None,
     timings: dict | None = None,
 ) -> DataFrame:
@@ -364,6 +336,10 @@ def incremental_batch(
     deltas; folded into ``state_clusters_base`` /
     ``state_members_base`` every ``cfg.compact_every`` batches), and —
     in bounded-signature mode — ``state_texts``.
+
+    **Counts for free**: the batch's row counts are observed on the
+    jobs that checkpoint its frames anyway (no extra Spark job) and
+    committed with its ledger entry (:meth:`StageCatalog.applied_batches`).
     """
     import time as _time
 
@@ -379,8 +355,26 @@ def incremental_batch(
             timings[phase] = round(_time.time() - _t, 2)
         _t = _time.time()
 
+    observations: list[Observation] = []
+
+    def observed(df: DataFrame, **metrics) -> DataFrame:
+        # top of a local_ckpt'd frame only: AQE never prunes the root,
+        # so the observation always resolves (see resolved_clusters)
+        observations.append(Observation())
+        return df.observe(
+            observations[-1], *[m.alias(k) for k, m in metrics.items()]
+        )
+
+    rows = F.count(F.lit(1))
     new_docs = new_docs.select("doc_id", "text")
-    new_sigs = local_ckpt(compute_signatures(new_docs, cfg))
+    new_sigs = local_ckpt(
+        observed(
+            compute_signatures(new_docs, cfg),
+            n_new_sigs=rows,
+            # = the rows explode_buckets emits from these signatures
+            n_new_bucket_rows=F.coalesce(F.sum(F.size("bands")), F.lit(0)),
+        )
+    )
     _mark("sigs")
     new_buckets = explode_buckets(new_sigs)
     has_state = catalog.is_committed("state_signatures")
@@ -440,7 +434,7 @@ def incremental_batch(
         # accumulated corpus (round-5 incremental campaign: batch
         # walls 45 → 154 s across 8 × 250k batches) — the one stored
         # copy is O(touched ∪ new), not O(corpus)
-        bucket_input = local_ckpt(bucket_input)
+        bucket_input = local_ckpt(observed(bucket_input, n_bucket_input_rows=rows))
     _mark("buckets")
     cand = candidate_pairs(bucket_input, cfg)
     cand_new = (
@@ -496,33 +490,31 @@ def incremental_batch(
     # was 49-111 s of every 90-155 s batch — 67% of the whole ingest.
     # Candidates are LSH-bounded (O(touched ∪ new)), so the stored
     # copy is tiny.
-    cand_new = local_ckpt(cand_new)
+    cand_new = local_ckpt(observed(cand_new, n_candidates=rows))
     _mark("cand")
 
-    if cfg.store_shingles:
-        verify_docs = None
-    else:
-        # bounded-state mode: exact shingles recomputed for candidate
-        # ids only, from the disk-resident text state + this batch
-        if has_state and catalog.is_committed("state_texts"):
-            old_texts = catalog.read(spark, "state_texts").join(
-                F.broadcast(new_ids), F.col("doc_id") == F.col("nid"), "left_anti"
-            ).select("doc_id", "text")
-            verify_docs = old_texts.unionByName(new_docs)
-        else:
-            verify_docs = new_docs
+    # texts for verify_pairs' bounded-state path (exact shingles
+    # recomputed for candidate ids only); ignored when the signatures
+    # carry shingle arrays.  state_texts exists only in bounded mode.
+    verify_docs = new_docs
+    if catalog.is_committed("state_texts"):
+        verify_docs = catalog.read(spark, "state_texts").join(
+            F.broadcast(new_ids), F.col("doc_id") == F.col("nid"), "left_anti"
+        ).select("doc_id", "text").unionByName(new_docs)
 
     new_edges = local_ckpt(
-        verify_pairs(cand_new, all_sigs, cfg, docs=verify_docs).select("a", "b")
+        observed(
+            verify_pairs(cand_new, all_sigs, cfg, docs=verify_docs).select("a", "b"),
+            n_new_edges=rows,
+        )
     )
     _mark("verify")
 
-    n_star_edges = 0
-    counters: dict = {}
+    base_rows: list[int] = []
     if has_state:
         # components touched by a new edge (new docs resolve to
         # themselves — they have no prior label).  Label lookup is
-        # endpoint-pruned (_resolved_for): the compacted base is read
+        # endpoint-pruned (resolved_clusters with ids): the base is read
         # only at the endpoints' doc_bkt partitions, never fully
         # scanned (VERDICT r3 "what's wrong" #1).
         endpoint_ids = (
@@ -536,24 +528,20 @@ def incremental_batch(
         deltas = _latest_deltas(spark, catalog)
         if deltas is not None:
             deltas = local_ckpt(deltas)
-        prior_ep = _resolved_for(
-            spark,
-            catalog,
-            endpoint_ids,
-            cfg,
-            counters=counters if with_metrics else None,
-            deltas=deltas,
+        prior_ep = resolved_clusters(
+            spark, catalog, endpoint_ids, cfg, deltas, base_rows=base_rows
         )
         affected = local_ckpt(
             prior_ep.select(F.col("cluster_id").alias("aff_label")).distinct()
         )
         members = _affected_members(spark, catalog, affected, cfg, deltas=deltas)
         star_edges = local_ckpt(
-            members.filter(F.col("doc_id") != F.col("cluster_id"))
-            .select(F.col("doc_id").alias("a"), F.col("cluster_id").alias("b"))
+            observed(
+                members.filter(F.col("doc_id") != F.col("cluster_id"))
+                .select(F.col("doc_id").alias("a"), F.col("cluster_id").alias("b")),
+                n_star_edge_rows=rows,
+            )
         )
-        if with_metrics:
-            n_star_edges = star_edges.count()
         cc_edges = new_edges.unionByName(star_edges)
     else:
         cc_edges = new_edges
@@ -588,29 +576,19 @@ def incremental_batch(
         cand_new.filter(F.col("forced")).select("a", "b"),
         path_key=key,
     )
-    if with_metrics:
-        metrics = {
-            "n_new_sigs": new_sigs.count(),
-            "n_new_bucket_rows": new_buckets.count(),
-            "n_bucket_input_rows": bucket_input.count(),
-            "n_candidates": cand_new.count(),
-            "n_new_edges": new_edges.count(),
-            "n_star_edge_rows": n_star_edges,
-            # rows actually read from the compacted label base for
-            # endpoint resolution (0 until first compaction) — pinned
-            # by tests/test_incremental.py: with state_partitions
-            # scaled to the corpus this stays FLAT as the corpus grows
-            "n_endpoint_base_rows": counters.get("n_endpoint_base_rows", 0),
-        }
-        catalog.append(
-            "inc_metrics",
-            spark.createDataFrame(
-                [tuple(metrics.values()) + (batch_seq,)],
-                list(metrics.keys()) + ["batch_seq"],
-            ),
-            path_key=key,
-        )
-    catalog.mark_batch_applied(key, batch_seq)
+    counts = {
+        "n_star_edge_rows": 0,
+        # rows read from the compacted label base for endpoint
+        # resolution (0 until first compaction) — pinned by
+        # tests/test_incremental_recovery.py: with state_partitions
+        # scaled to the corpus this stays FLAT as the corpus grows
+        "n_endpoint_base_rows": sum(base_rows),
+    }
+    for obs in observations:
+        counts.update(obs.get)
+    # an unstored bucket stream is new_buckets itself
+    counts.setdefault("n_bucket_input_rows", counts["n_new_bucket_rows"])
+    catalog.mark_batch_applied(key, batch_seq, counts)
     _mark("append")
     if cfg.compact_every and batch_seq % cfg.compact_every == 0:
         compact_state(spark, catalog, cfg)

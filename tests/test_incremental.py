@@ -64,12 +64,9 @@ def test_batch2_does_not_rebucket_batch1(spark, cfg, pages_500, tmp_path_factory
     # batches from different decades' bases: essentially disjoint text
     b1 = norm.filter(F.col("doc_id") < 250)
     b2 = norm.filter(F.col("doc_id") >= 250)
-    incremental_batch(b1, cfg, cat, spark, with_metrics=True)
-    incremental_batch(b2, cfg, cat, spark, with_metrics=True)
-    m = {
-        r["batch_seq"]: r.asDict()
-        for r in cat.read(spark, "inc_metrics").collect()
-    }
+    incremental_batch(b1, cfg, cat, spark)
+    incremental_batch(b2, cfg, cat, spark)
+    m = {e["seq"]: e["counts"] for e in cat.applied_batches().values()}
     total_bucket_rows = m[1]["n_new_bucket_rows"] + m[2]["n_new_bucket_rows"]
     # batch 2's candidate input = its own buckets + touched old buckets;
     # with disjoint batches, touched must be a small fraction of batch-1
@@ -250,14 +247,51 @@ def test_mostly_disjoint_batch_pulls_only_affected_stars(
     cat = StageCatalog(str(tmp_path_factory.mktemp("incr_star")))
     b1 = norm.filter(F.col("doc_id") < 250)
     b2 = norm.filter(F.col("doc_id") >= 250)
-    incremental_batch(b1, cfg, cat, spark, with_metrics=True)
-    incremental_batch(b2, cfg, cat, spark, with_metrics=True)
-    m = {
-        r["batch_seq"]: r.asDict()
-        for r in cat.read(spark, "inc_metrics").collect()
-    }
+    incremental_batch(b1, cfg, cat, spark)
+    incremental_batch(b2, cfg, cat, spark)
+    m = {e["seq"]: e["counts"] for e in cat.applied_batches().values()}
     # the synthetic corpus has ~1 near-dup pair straddling the 250
     # boundary; its component's stars come back, the other ~240
     # batch-1 docs' labels are never read into CC
     assert 0 < m[2]["n_star_edge_rows"] <= 8, m[2]
     assert m[2]["n_star_edge_rows"] < m[1]["n_new_sigs"] / 10
+
+
+def test_ledger_counts_equal_recounts(spark, cfg, pages_500, tmp_path_factory):
+    """Every batch's ledger entry carries the counts it observed on its
+    own checkpoint jobs; each must equal an independent recount of the
+    frame it describes, and a replay of an applied key must leave the
+    entries byte-identical."""
+    from face_duplicate_detection_spark.operators.lsh import explode_buckets
+    from face_duplicate_detection_spark.operators.signatures import (
+        compute_signatures,
+    )
+
+    norm = matchable_docs(normalize_pages(pages_500, cfg)).select("doc_id", "text")
+    cat = StageCatalog(str(tmp_path_factory.mktemp("incr_ledger")))
+    batches = {
+        "k1": norm.filter(F.col("doc_id") < 250),
+        "k2": norm.filter(F.col("doc_id") >= 250),
+    }
+    for key, b in batches.items():
+        incremental_batch(b, cfg, cat, spark, batch_key=key)
+    with open(cat._ledger_path(), "rb") as f:
+        ledger_before = f.read()
+
+    entries = cat.applied_batches()
+    assert sorted(e["seq"] for e in entries.values()) == [1, 2]
+    for key, b in batches.items():
+        counts = entries[key]["counts"]
+        assert counts["n_new_sigs"] == b.count()
+        assert counts["n_new_bucket_rows"] == (
+            explode_buckets(compute_signatures(b, cfg)).count()
+        )
+        assert counts["n_new_edges"] <= counts["n_candidates"]
+        assert counts["n_endpoint_base_rows"] == 0      # never compacted
+    first = entries["k1"]["counts"]
+    assert first["n_star_edge_rows"] == 0
+    assert first["n_bucket_input_rows"] == first["n_new_bucket_rows"]
+
+    incremental_batch(batches["k1"], cfg, cat, spark, batch_key="k1")  # replay
+    with open(cat._ledger_path(), "rb") as f:
+        assert f.read() == ledger_before

@@ -141,11 +141,8 @@ def test_endpoint_base_rows_flat_at_scaled_partitions(
             [(1_000_000, " ".join(f"u{0:05d}w{j:02d}" for j in range(20)))],
             ["doc_id", "text"],
         )
-        incremental_batch(dup, c, cat, spark, with_metrics=True)
-        m = {
-            r["batch_seq"]: r.asDict()
-            for r in cat.read(spark, "inc_metrics").collect()
-        }
+        incremental_batch(dup, c, cat, spark)
+        m = {e["seq"]: e["counts"] for e in cat.applied_batches().values()}
         assert m[2]["n_new_edges"] >= 1
         read_rows[n] = m[2]["n_endpoint_base_rows"]
         # far below a full scan of the n-row base
@@ -153,3 +150,27 @@ def test_endpoint_base_rows_flat_at_scaled_partitions(
 
     # 4× corpus, constant bucket size → flat endpoint read
     assert read_rows[800] <= 2 * read_rows[200]
+
+
+def test_endpoint_base_rows_counted_when_no_endpoint_is_in_base(
+    spark, cfg, tmp_path_factory
+):
+    """A batch whose only new edge joins two NEW docs still reads the
+    endpoints' base partitions, and that read is what the ledger
+    counts.  The lookup finds no base row, so AQE's empty-relation
+    propagation drops the base subtree from the executed plan — an
+    Observation placed there never resolves — yet the batch must
+    commit with the true row count."""
+    cat = StageCatalog(str(tmp_path_factory.mktemp("epnew")))
+    c = cfg.with_(compact_every=1, state_partitions=8)
+    incremental_batch(_unique_corpus(spark, 200), c, cat, spark)
+    text = " ".join(f"fresh{j:02d}" for j in range(20))
+    pair = spark.createDataFrame(
+        [(1_000_000, text), (1_000_008, text)], ["doc_id", "text"]
+    )
+    labels = _labels(incremental_batch(pair, c, cat, spark))
+    assert labels[1_000_000] == labels[1_000_008] == 1_000_000
+    counts = {e["seq"]: e["counts"] for e in cat.applied_batches().values()}
+    assert counts[2]["n_new_edges"] == 1
+    # both endpoints sit in doc_bkt 0, which holds ids ≡ 0 mod 8 of 0..199
+    assert counts[2]["n_endpoint_base_rows"] == len(range(0, 200, 8))
