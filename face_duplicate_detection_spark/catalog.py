@@ -158,19 +158,6 @@ class StageCatalog:
         with open(self._manifest(name)) as f:
             return json.load(f)
 
-    def partition_rows(self, name: str, column: str, values: list[int]) -> int:
-        """Rows in the ``column ∈ values`` partitions of a
-        ``partition_by`` table — what a pruned read of it scans —
-        summed from the parquet footers, without a Spark job."""
-        import pyarrow as pa
-        import pyarrow.dataset as ds
-
-        part = ds.partitioning(pa.schema([(column, pa.int32())]), flavor="hive")
-        table = ds.dataset(
-            self.read_manifest(name)["path"], format="parquet", partitioning=part
-        )
-        return table.count_rows(filter=ds.field(column).isin(values))
-
     def invalidate(self, name: str) -> None:
         if self.is_committed(name):
             os.remove(self._manifest(name))

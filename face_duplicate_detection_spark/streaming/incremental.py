@@ -45,6 +45,8 @@ O(corpus)-per-batch costs, all removed):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -162,58 +164,63 @@ def resolved_clusters(
     ids: DataFrame | None = None,
     cfg: DedupConfig | None = None,
     deltas: DataFrame | None = None,
-    base_rows: list[int] | None = None,
+    observe_base: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Merge-on-read view of the cluster state (doc_id, cluster_id):
     compacted base ⟕ latest delta (delta wins), singletons implicit.
 
     Without ``ids`` every seen doc_id (``state_signatures``) is
-    resolved against the unpruned base.  With ``ids`` (and ``cfg``)
-    only those docs are, and the label state is never fully scanned
-    (VERDICT r3 "what's wrong" #1): the base is partition-pruned to
-    the ids' ``doc_bkt`` buckets (pmod with the compact-time bucket
-    count) and both sides are semi-joined to the broadcast id set.
-    ``deltas`` reuses a caller's latest-delta view.  ``base_rows``
-    gets the pruned read's row count appended, from the parquet
-    footers: an Observation inside this plan is not reliable, because
-    AQE drops the observed subtree whenever no id is in the base
-    (empty-relation propagation) and ``Observation.get`` then fails.
+    left-joined to the unpruned base and the deltas.  With ``ids``
+    (and ``cfg``) only those docs are resolved, and the label state is
+    never fully scanned (VERDICT r3 "what's wrong" #1): the base is
+    partition-pruned to the ids' ``doc_bkt`` buckets (pmod with the
+    compact-time bucket count), both label sides are semi-joined to
+    the broadcast id set, and the ids and their label rows are unioned
+    and grouped by doc_id.  ``observe_base`` wraps that pruned base
+    read (incremental_batch observes its row count there).  The union
+    keeps the read in one stage with the ids, so an observation on it
+    always resolves; behind a left join, AQE's empty-relation
+    propagation drops the whole base subtree from the executed plan
+    whenever no id has a base row.  ``deltas`` reuses a caller's
+    latest-delta view.
     """
-    if ids is None:
-        out = catalog.read(spark, "state_signatures").select("doc_id")
-    else:
-        out = ids.select("doc_id").distinct()
-        bids = F.broadcast(out)
-
-    def lookup(table: DataFrame, alias: str) -> DataFrame:
-        if ids is not None:
-            table = table.join(bids, "doc_id", "left_semi")
-        return table.select("doc_id", F.col("cluster_id").alias(alias))
-
-    label = F.col("doc_id")
+    sides: dict[str, DataFrame] = {}
     if catalog.is_committed(BASE_TABLE):
         base = catalog.read(spark, BASE_TABLE)
         if ids is not None:
             p = _base_partitions(catalog, BASE_TABLE, cfg)
             buckets = [
                 r["b"]
-                for r in out.select(F.pmod("doc_id", F.lit(p)).alias("b"))
+                for r in ids.select(F.pmod("doc_id", F.lit(p)).alias("b"))
                 .distinct()
                 .collect()
             ]
             base = base.filter(F.col("doc_bkt").isin(buckets))  # partition pruning
-            if base_rows is not None:
-                base_rows.append(
-                    catalog.partition_rows(BASE_TABLE, "doc_bkt", buckets)
-                )
-        out = out.join(lookup(base, "_base"), "doc_id", "left")
-        label = F.coalesce("_base", label)
+            if observe_base is not None and buckets:
+                base = observe_base(base)
+        sides["_base"] = base
     if deltas is None:
         deltas = _latest_deltas(spark, catalog)
     if deltas is not None:
-        out = out.join(lookup(deltas, "_delta"), "doc_id", "left")
-        label = F.coalesce("_delta", label)
-    return out.select("doc_id", label.alias("cluster_id"))
+        sides["_delta"] = deltas
+    labels = [F.col(c) for c in reversed(sides)]      # delta wins
+    if ids is None:
+        out = catalog.read(spark, "state_signatures").select("doc_id")
+        for alias, side in sides.items():
+            side = side.select("doc_id", F.col("cluster_id").alias(alias))
+            out = out.join(side, "doc_id", "left")
+        return out.select(
+            "doc_id", F.coalesce(*labels, F.col("doc_id")).alias("cluster_id")
+        )
+    out = ids.select("doc_id")
+    bids = F.broadcast(out.distinct())
+    for alias, side in sides.items():
+        side = side.join(bids, "doc_id", "left_semi")
+        side = side.select("doc_id", F.col("cluster_id").alias(alias))
+        out = out.unionByName(side, allowMissingColumns=True)
+    return out.groupBy("doc_id").agg(
+        F.coalesce(*[F.max(c) for c in labels], F.col("doc_id")).alias("cluster_id")
+    )
 
 
 def _affected_members(
@@ -358,8 +365,8 @@ def incremental_batch(
     observations: list[Observation] = []
 
     def observed(df: DataFrame, **metrics) -> DataFrame:
-        # top of a local_ckpt'd frame only: AQE never prunes the root,
-        # so the observation always resolves (see resolved_clusters)
+        # only where AQE cannot prune the frame from the executed plan:
+        # the top of a local_ckpt'd frame, or resolved_clusters' base read
         observations.append(Observation())
         return df.observe(
             observations[-1], *[m.alias(k) for k, m in metrics.items()]
@@ -510,7 +517,6 @@ def incremental_batch(
     )
     _mark("verify")
 
-    base_rows: list[int] = []
     if has_state:
         # components touched by a new edge (new docs resolve to
         # themselves — they have no prior label).  Label lookup is
@@ -529,7 +535,12 @@ def incremental_batch(
         if deltas is not None:
             deltas = local_ckpt(deltas)
         prior_ep = resolved_clusters(
-            spark, catalog, endpoint_ids, cfg, deltas, base_rows=base_rows
+            spark,
+            catalog,
+            endpoint_ids,
+            cfg,
+            deltas,
+            observe_base=lambda df: observed(df, n_endpoint_base_rows=rows),
         )
         affected = local_ckpt(
             prior_ep.select(F.col("cluster_id").alias("aff_label")).distinct()
@@ -579,10 +590,11 @@ def incremental_batch(
     counts = {
         "n_star_edge_rows": 0,
         # rows read from the compacted label base for endpoint
-        # resolution (0 until first compaction) — pinned by
+        # resolution (0 before the first compaction and for a batch
+        # without new edges) — pinned by
         # tests/test_incremental_recovery.py: with state_partitions
         # scaled to the corpus this stays FLAT as the corpus grows
-        "n_endpoint_base_rows": sum(base_rows),
+        "n_endpoint_base_rows": 0,
     }
     for obs in observations:
         counts.update(obs.get)

@@ -157,10 +157,9 @@ def test_endpoint_base_rows_counted_when_no_endpoint_is_in_base(
 ):
     """A batch whose only new edge joins two NEW docs still reads the
     endpoints' base partitions, and that read is what the ledger
-    counts.  The lookup finds no base row, so AQE's empty-relation
-    propagation drops the base subtree from the executed plan — an
-    Observation placed there never resolves — yet the batch must
-    commit with the true row count."""
+    counts, although the lookup finds no base row (behind a left join
+    AQE would drop the observed base read from the executed plan).  A
+    later batch without new edges reads no base partition."""
     cat = StageCatalog(str(tmp_path_factory.mktemp("epnew")))
     c = cfg.with_(compact_every=1, state_partitions=8)
     incremental_batch(_unique_corpus(spark, 200), c, cat, spark)
@@ -174,3 +173,12 @@ def test_endpoint_base_rows_counted_when_no_endpoint_is_in_base(
     assert counts[2]["n_new_edges"] == 1
     # both endpoints sit in doc_bkt 0, which holds ids ≡ 0 mod 8 of 0..199
     assert counts[2]["n_endpoint_base_rows"] == len(range(0, 200, 8))
+    lone = spark.createDataFrame(
+        [(2_000_000, " ".join(f"lone{j:02d}" for j in range(20)))],
+        ["doc_id", "text"],
+    )
+    labels = _labels(incremental_batch(lone, c, cat, spark))
+    assert labels[2_000_000] == 2_000_000
+    counts = {e["seq"]: e["counts"] for e in cat.applied_batches().values()}
+    assert counts[3]["n_new_edges"] == 0
+    assert counts[3]["n_endpoint_base_rows"] == 0
